@@ -972,6 +972,12 @@ class IndexWriter:
                      if ln["batch_id"].startswith("compact-")]
         delta = [ln for ln in old_lineage
                  if not ln["batch_id"].startswith("compact-")]
+        # resolve "auto" before the noop test: at the layer cap with no
+        # delta, auto must still fold the tiers ("merge" below)
+        if scope == "auto":
+            scope = ("delta" if compacted
+                     and len(compacted) < _MAX_COMPACT_LAYERS
+                     else "merge")
         if compacted and not delta and (scope != "merge"
                                         or len(compacted) == 1):
             # fully compacted already: keys are unique and the layout
@@ -985,10 +991,6 @@ class IndexWriter:
             self._expire_retired()
             return {**old_lineage[-1], "noop": True,
                     "wall_sec": round(time.time() - t0, 3)}
-        if scope == "auto":
-            scope = ("delta" if compacted
-                     and len(compacted) < _MAX_COMPACT_LAYERS
-                     else "merge")
         # with zero existing compact layers the delta IS everything —
         # the scopes coincide, and "merge" bookkeeping is simpler
         tiered = scope == "delta" and bool(compacted)

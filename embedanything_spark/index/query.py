@@ -3,9 +3,10 @@
 Distributed plan:
 
   query terms (tiny, driver-side tokenize — same frozen analyzer)
-    → dictionary df lookup DRIVER-SIDE (pyarrow over the term-sorted
-      dictionary, row-group pruned; ships in the kernel closure — no
-      dictionary scan or broadcast join inside the Spark job)
+    → dictionary df lookup DRIVER-SIDE (the serving path's keyed
+      lookup over the term-sorted dictionary, below; ships in the
+      kernel closure — no dictionary scan or broadcast join inside
+      the Spark job)
     → postings scan filtered term IN (...) — file/row-group pruned
     → repartition(hash(range_id)): every doc's blocks for ALL query
       terms are co-located (blocks are doc-range-aligned), so scoring
@@ -16,16 +17,35 @@ Distributed plan:
       in pandas (same cumcount kernel the serving path uses) — a
       row_number window here only added an exchange + sort stage per
       query job
-    → docmap fetch with the surviving doc_ids pushed into the scan
-      (In + min/max range filters; docmap files are doc_id-ordered so
-      row-group pruning reads O(Σk), not O(corpus)).
+    → docmap fetch DRIVER-SIDE for the surviving doc_ids (the same
+      keyed lookup; docmap files are doc_id-ordered, so footer min/max
+      picks O(Σk) row groups, not O(corpus)).
 
-Serving plan (``search_local``): identical lookups and the identical
-scoring kernel, executed driver-side over pyarrow reads — the
-low-latency path a deployment serves interactive queries from
-(measured p50 ~0.1 s on a 2M-turn compacted index vs ~1 s of Spark
-job scheduling); rank-identical to the distributed plan by
-construction and by test.
+Serving plan (``search_local``): the identical scoring kernel,
+executed driver-side over keyed lookups into a per-reader cache of
+DECODED parquet row groups — the low-latency path a deployment serves
+interactive queries from; rank-identical to the distributed plan by
+construction and by test. Each index file is one or a few row groups
+(8 MB at most), so a term-pushed parquet read decompresses and decodes
+a whole group only to keep the few rows of 2–3 query terms. Instead,
+each lookup (dictionary df by term, postings blocks by term, docmap by
+doc_id):
+
+  → picks row groups from the footer min/max of the key column
+    (memoized per reader with the file listing),
+  → decodes each chosen row group ONCE per reader and keeps it
+    resident in a bounded LRU (``_MAX_CACHED_ROW_GROUP_BYTES``),
+  → slices the matching rows by binary search on the key column when
+    the row group is sorted by it (compacted layers, the dictionary,
+    the docmap, every file this engine writes — checked once, at
+    fill), or by an exact ``is_in`` mask when it is not.
+
+The read-side counterpart of a columnar inverted index: decoded
+blocks stay resident and are sliced by key, with no format change.
+On a 3-layer 8k-turn index (1000 conversations plus two 1 % deltas),
+single-query p50 fell from 73 ms to 16 ms on a 4-core x86 host, with
+13 MB resident. The distributed plan's driver-side df lookup and
+docmap fetch go through the same cache.
 
 Block-max pruning (the engine's one genuinely novel operator —
 SURVEY.md §4 item 4): within a partition, per query, ranges are
@@ -55,8 +75,11 @@ rust/src/reranker/model.rs:244-276); MaxSim's per-query-term max/sum
 
 from __future__ import annotations
 
+import errno
 import json
-from pathlib import Path
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -100,26 +123,18 @@ def _merge_topk(best_doc, best_score, doc, score, k):
 # beyond the cap blocks are decoded without being retained.
 _MAX_CACHED_BLOCKS = 8192
 
-# Serving-path split between bulk and lazy payload fetch: a term whose
-# total postings (Σn over its blocks) exceed this rides the LAZY path —
-# its payload bytes are read only if the bound sweep actually decodes
-# one of its ranges (then all at once, term-granular, memoized). Below
-# it, payloads are cheap enough that one shared bulk read wins.
-_HEAVY_TERM_POSTINGS = 1 << 18
+# Per-reader cap on the decoded parquet row groups kept resident for
+# lookups (Arrow buffers plus the key index, estimated at fill). A row
+# group larger than the cap is decoded for its lookup and not kept.
+_MAX_CACHED_ROW_GROUP_BYTES = 256 << 20
 
-# The lazy split is applied only on NON-LOCAL index roots by default:
-# on page-cached local disk the skipped read is nearly free and the
-# extra metadata-first pass costs ~5% (measured paired at 20M turns,
-# lazy/bulk 1.05); on remote object storage the payload bytes are the
-# dominant per-query cost and skipping them is the point. Flip to True
-# to force the lazy split on local roots (tests do).
-_LAZY_ON_LOCAL = False
+# The column each logical table is looked up by.
+_LOOKUP_KEY = {"dictionary": "term", "postings": "term", "docmap": "doc_id"}
 
 
 def _score_partition_factory(qinfo: dict, n_docs: int, avgdl: float,
                              prune: bool, decode_acc=None,
-                             dfs: dict | None = None,
-                             payload_fetch=None):
+                             dfs: dict | None = None):
     """qinfo: {query_id: {"k": int, "terms": [term, ...]}}. Per-term
     global df arrives either as a ``df`` column on the block rows or
     via ``dfs`` ({term: df}, resolved driver-side from the term-sorted
@@ -128,13 +143,6 @@ def _score_partition_factory(qinfo: dict, n_docs: int, avgdl: float,
     OUT of the per-query Spark job entirely).
     ``decode_acc``: optional Spark accumulator counting DECODED ranges
     (pruning-effectiveness instrumentation).
-    ``payload_fetch``: serving-path LAZY payload loader —
-    ``payload_fetch([(term, min_doc), ...], range_id) -> {(term,
-    min_doc): (doc_bytes, tf_bytes, dl_bytes)}``. When given, rows may
-    arrive with ``None`` payloads (heavy terms); the sweep fetches a
-    range's missing payloads only when the bound test says that range
-    actually decodes. Block-max pruning then saves the dominant
-    serving cost — the payload READ — not just the decode CPU.
 
     The sweep is pure numpy: one stable term-major sort of the pooled
     block rows up front, per-term contiguous row slices, and a decode
@@ -236,17 +244,6 @@ def _score_partition_factory(qinfo: dict, n_docs: int, avgdl: float,
                     break  # strict: ties at the k-th score still scored
                 if decode_acc is not None:
                     decode_acc.add(1)
-                if payload_fetch is not None:
-                    miss = [int(i) for i in sel[rstarts[j]:rends[j]]
-                            if doc_b[i] is None and i not in cache]
-                    if miss:
-                        got = payload_fetch(
-                            [(term_arr[i], int(min_doc[i]))
-                             for i in miss],
-                            int(rids[rstarts[j]]))
-                        for i in miss:
-                            doc_b[i], tf_b[i], dl_b[i] = \
-                                got[(term_arr[i], int(min_doc[i]))]
                 docs_l, contrib_l = [], []
                 for i in sel[rstarts[j]:rends[j]]:
                     d, tf, dl = decode_row(int(i))
@@ -278,18 +275,88 @@ def _score_partition_factory(qinfo: dict, n_docs: int, avgdl: float,
     return score_partition
 
 
-def _term_filter(terms: list[str]):
-    """OR-chain of equalities instead of ``isin``: pyarrow's row-group
-    statistics pruning simplifies ``==`` against min/max but NOT
-    ``is_in`` (measured 7× on a term-range-compacted index), so the
-    chain is what lets a serving lookup touch only the row groups
-    whose term span contains a query term."""
-    import functools
-    import operator
+class _Group(NamedTuple):
+    """One row group: its file fragment, id and footer key span."""
+    frag: object
+    id: int
+    lo: object
+    hi: object
 
-    import pyarrow.compute as pc
-    return functools.reduce(operator.or_,
-                            [pc.field("term") == t for t in terms])
+
+class _Table:
+    """A logical table as a reader sees it: its pyarrow dataset, the
+    (size, mtime) of every file at listing time, and per row group the
+    footer min/max of the lookup key (None = no statistics)."""
+
+    def __init__(self, dataset, fsys, stamps: dict, key: str):
+        self.dataset, self.fs, self.stamps, self.key = \
+            dataset, fsys, stamps, key
+        self.groups = []
+        for frag in dataset.get_fragments():
+            for rg in frag.row_groups:
+                st = (rg.statistics or {}).get(key) or {}
+                self.groups.append(_Group(frag, rg.id, st.get("min"),
+                                          st.get("max")))
+
+    def groups_for(self, keys: list) -> list:
+        """Row groups whose key span may hold one of ``keys`` (sorted)."""
+        import bisect
+        out = []
+        for g in self.groups:
+            if g.lo is None or g.hi is None:
+                out.append(g)
+                continue
+            i = bisect.bisect_left(keys, g.lo)
+            if i < len(keys) and keys[i] <= g.hi:
+                out.append(g)
+        return out
+
+    def check_fresh(self, paths: set) -> None:
+        """Raise FileNotFoundError when a file the reader listed is gone
+        or was replaced: cached row groups would otherwise keep serving
+        a lineage that compaction has retired."""
+        for info in self.fs.get_file_info(sorted(paths)):
+            if (info.size, info.mtime_ns) != self.stamps[info.path]:
+                raise FileNotFoundError(
+                    errno.ENOENT, "index file removed or replaced since "
+                    "the reader listed it", info.path)
+
+
+class _RowGroup:
+    """One decoded row group, sliceable by its lookup key. ``sorted_keys``
+    is the key column as numpy when the rows are sorted by it (binary
+    search), else None (exact ``is_in`` mask)."""
+
+    def __init__(self, table, key: str):
+        import pyarrow.compute as pc
+        self.table, self.key = table.combine_chunks(), key
+        col = self.table.column(key)
+        ordered = col.null_count == 0 and (
+            len(col) < 2
+            or pc.all(pc.greater_equal(col[1:], col[:-1])).as_py())
+        self.sorted_keys = col.to_numpy() if ordered else None
+        self.nbytes = self.table.nbytes
+        if self.sorted_keys is not None:
+            self.nbytes += self.sorted_keys.nbytes
+            if self.sorted_keys.dtype == object:
+                # a Python str object per row: ~49 B header + its chars
+                self.nbytes += col.nbytes + 49 * len(col)
+
+    def select(self, keys: list):
+        """Rows whose key is in ``keys`` (sorted), in file order."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        if self.sorted_keys is None:
+            col = self.table.column(self.key)
+            return self.table.filter(
+                pc.is_in(col, value_set=pa.array(keys, col.type)))
+        want = np.array(keys, dtype=self.sorted_keys.dtype)
+        lo = np.searchsorted(self.sorted_keys, want, "left")
+        hi = np.searchsorted(self.sorted_keys, want, "right")
+        spans = [np.arange(a, b) for a, b in zip(lo, hi) if b > a]
+        if not spans:
+            return self.table.slice(0, 0)
+        return self.table.take(np.concatenate(spans))
 
 
 class IndexReader:
@@ -309,10 +376,15 @@ class IndexReader:
         # via index_fs — the reader never requires POSIX visibility.
         self.root = str(root)
         self.asof = asof
-        from pyarrow import fs as pafs
-        from embedanything_spark.index.build import index_fs
-        self._local_root = isinstance(index_fs(self.root)[0],
-                                      pafs.LocalFileSystem)
+        # one lock guards the table memo, the row-group LRU, its
+        # counters and the stale-handle reset; row groups decode
+        # outside it
+        self._lock = threading.Lock()
+        self._tables: dict[str, _Table] = {}
+        self._row_groups: OrderedDict = OrderedDict()
+        self._generation = 0
+        self.row_group_fills = self.row_group_hits = 0
+        self.row_group_bytes = 0
         meta_text = read_index_text(self.root, "_meta/meta.json")
         if meta_text is None:
             raise FileNotFoundError(
@@ -343,22 +415,22 @@ class IndexReader:
                              avgdl=(int(tok or 0) / n_docs) if n_docs
                              else 0.0)
 
-    def _dataset(self, table: str):
-        """Memoized pyarrow dataset for a logical table. The reader is
-        a snapshot reader (meta/n_docs/avgdl freeze at construction),
-        so caching the file listing + footers is consistent — and it
-        is the serving path's biggest fixed cost (re-parsing footers
-        per query). A new IndexReader sees new commits."""
-        cache = getattr(self, "_pa_datasets", None)
-        if cache is None:
-            cache = self._pa_datasets = {}
-        if table not in cache:
+    def _table(self, table: str) -> _Table:
+        """Memoized listing, footers and row-group key statistics of a
+        logical table. The reader is a snapshot reader (meta/n_docs/
+        avgdl freeze at construction), so caching them is consistent —
+        and re-parsing footers per query was the serving path's biggest
+        fixed cost. A new IndexReader sees new commits."""
+        with self._lock:
+            if table in self._tables:
+                return self._tables[table]
             import pyarrow.dataset as pads
             from pyarrow import fs as pafs
             from embedanything_spark.index.build import (index_fs,
                                                          join_path)
             fsys, base = index_fs(self.root)
             root_s, base = str(self.root).rstrip("/"), base.rstrip("/")
+            stamps: dict[str, tuple] = {}
 
             def _ls(d: str) -> list[str]:
                 # fs-relative listing: swap the root prefix for
@@ -370,8 +442,11 @@ class IndexReader:
                        if d.startswith(root_s)
                        else d.split("://", 1)[-1])
                 sel = pafs.FileSelector(rel, allow_not_found=True)
-                return sorted(i.path for i in fsys.get_file_info(sel)
-                              if i.base_name.endswith(".parquet"))
+                found = [i for i in fsys.get_file_info(sel)
+                         if i.base_name.endswith(".parquet")]
+                stamps.update((i.path, (i.size, i.mtime_ns))
+                              for i in found)
+                return sorted(i.path for i in found)
 
             if table == "dictionary":
                 files = _ls(join_path(self.root, "dictionary"))
@@ -379,34 +454,89 @@ class IndexReader:
                 files = [f for d in table_paths(self.root, table,
                                                 self.asof)
                          for f in _ls(d)]
-            cache[table] = pads.dataset(files, format="parquet",
-                                        filesystem=fsys)
-        return cache[table]
+            self._tables[table] = _Table(
+                pads.dataset(files, format="parquet", filesystem=fsys),
+                fsys, stamps, _LOOKUP_KEY[table])
+            return self._tables[table]
+
+    def _lookup(self, table: str, keys: list, columns: list[str]):
+        """The serving read primitive: the rows of ``table`` whose
+        lookup key (``_LOOKUP_KEY``) is in ``keys``, as a pyarrow table
+        of the key column plus ``columns``. Row groups are chosen by
+        their footer key span, decoded once into the reader's LRU, and
+        sliced by key (module doc)."""
+        import pyarrow as pa
+        t = self._table(table)
+        keys = sorted(set(keys))
+        cols = list(dict.fromkeys([t.key, *columns]))
+        hit = t.groups_for(keys)
+        t.check_fresh({g.frag.path for g in hit})
+        parts = [self._row_group(t, g, cols).select(keys) for g in hit]
+        parts = [p for p in parts if p.num_rows]
+        if not parts:
+            return t.dataset.schema.empty_table().select(cols)
+        return pa.concat_tables(parts)
+
+    def _row_group(self, t: _Table, g: _Group, cols: list[str]):
+        """A decoded row group from the LRU, filling it on a miss."""
+        ck = (g.frag.path, g.id, tuple(cols))
+        with self._lock:
+            rg = self._row_groups.get(ck)
+            if rg is not None:
+                self._row_groups.move_to_end(ck)
+                self.row_group_hits += 1
+                return rg
+            gen = self._generation
+        rg = self._fill(t, g.frag, g.id, cols)
+        with self._lock:
+            self.row_group_fills += 1
+            if gen != self._generation or ck in self._row_groups \
+                    or rg.nbytes > _MAX_CACHED_ROW_GROUP_BYTES:
+                return rg
+            self._row_groups[ck] = rg
+            self.row_group_bytes += rg.nbytes
+            while self.row_group_bytes > _MAX_CACHED_ROW_GROUP_BYTES:
+                _, old = self._row_groups.popitem(last=False)
+                self.row_group_bytes -= old.nbytes
+        return rg
+
+    @staticmethod
+    def _fill(t: _Table, frag, rg_id: int, cols: list[str]) -> _RowGroup:
+        return _RowGroup(frag.subset(row_group_ids=[rg_id])
+                         .to_table(schema=t.dataset.schema, columns=cols),
+                         t.key)
+
+    def cache_stats(self) -> dict:
+        """Row-group cache counters: fills (decodes), hits, resident
+        bytes and the cap."""
+        with self._lock:
+            return {"row_group_fills": self.row_group_fills,
+                    "row_group_hits": self.row_group_hits,
+                    "row_group_bytes": self.row_group_bytes,
+                    "row_group_max_bytes": _MAX_CACHED_ROW_GROUP_BYTES}
 
     def _term_dfs(self, terms: list[str]) -> dict:
-        """Driver-side per-term document frequency: a pyarrow read of
-        the term-sorted dictionary filtered to the query terms —
-        row-group statistics prune everything but the few groups
-        holding them (the classic term-lookup a serving tier does
-        against the dictionary, O(row groups touched), never
-        O(dictionary)). Time-travel reads derive df from the included
-        batches' block metadata instead (the finalized dictionary is
-        global): per-term Σn over (term, n) block rows — term-pushed
-        and tiny at fixture scale; at extreme scale prefer querying a
-        snapshot that has been finalized."""
+        """Driver-side per-term document frequency: a keyed lookup into
+        the term-sorted dictionary (O(row groups holding the terms),
+        never O(dictionary)). Time-travel reads derive df from the
+        included batches' block metadata instead (the finalized
+        dictionary is global): per-term Σn over (term, n) block rows —
+        term-keyed and tiny at fixture scale; at extreme scale prefer
+        querying a snapshot that has been finalized."""
         if self.asof is None:
-            tbl = (self._dataset("dictionary")
-                   .to_table(columns=["term", "df"],
-                             filter=_term_filter(terms)))
+            tbl = self._lookup("dictionary", terms, ["df"])
             return dict(zip(tbl["term"].to_pylist(),
                             tbl["df"].to_pylist()))
-        tbl = (self._dataset("postings")
-               .to_table(columns=["term", "n"],
-                         filter=_term_filter(terms)))
-        pdf = tbl.to_pandas()
+        pdf = self._lookup("postings", terms, ["n"]).to_pandas()
         if pdf.empty:
             return {}
         return pdf.groupby("term")["n"].sum().astype(int).to_dict()
+
+    def _docmap(self, ids: list[int]) -> pd.DataFrame:
+        """(doc_id, conv_id, turn_idx) of ``ids``: a keyed lookup into
+        the doc_id-ordered docmap."""
+        return self._lookup("docmap", ids,
+                            ["conv_id", "turn_idx"]).to_pandas()
 
     def _term_dfs_spark(self, terms: list[str]) -> dict:
         """Hadoop-FS-agnostic df resolution THROUGH THE JVM —
@@ -435,56 +565,73 @@ class IndexReader:
         through ``search`` is dominated by job scheduling (p50 ≈ 1 s
         against ≈ 70 ms of actual work, BENCH/BASELINE.md); a real
         deployment answers queries from a serving tier that reads the
-        index storage directly, which is exactly what this does:
+        index storage directly, which is exactly what this does, with
+        three keyed lookups into the reader's row-group cache
+        (``_lookup``, module doc):
 
-          * dictionary df lookup — pyarrow, term-pushed, row-group
-            pruned (``_term_dfs``),
-          * postings blocks for the query terms — pyarrow, the same
-            ``term IN (...)`` pushdown the distributed scan uses,
+          * dictionary df by term (``_term_dfs``),
+          * postings blocks by term — every block of the query terms,
           * the IDENTICAL `_score_partition_factory` numpy sweep over
             one global "partition" (every candidate block is present,
             so its per-partition top-k IS the global top-k),
-          * docmap fetch — pyarrow, ``doc_id`` min/max + IN pushdown
-            over the doc_id-ordered docmap files.
+          * docmap rows by doc_id for the ranked survivors.
 
         Exactness: rank-identical to ``search`` (property-tested);
         block-max pruning still applies, so decodes stay bounded by
-        the same upper-bound sweep. Scale envelope: postings fetch is
-        Σ_term blocks(term) rows — fine for interactive k≪corpus
+        the same upper-bound sweep. Memory: the decoded row groups a
+        reader keeps are capped at ``_MAX_CACHED_ROW_GROUP_BYTES``
+        (least recently used go first); ``cache_stats()`` reports
+        fills, hits and resident bytes. Scale envelope: postings fetch
+        is Σ_term blocks(term) rows — fine for interactive k≪corpus
         queries even at large corpora (that is what block-max indexes
         are for); batch scoring of thousands of queries should use
         ``search`` where the same kernel runs partition-parallel.
+        Safe to call from many threads on one reader.
 
         Returns a pandas DataFrame with ``search``'s result columns.
 
         Compaction safety: ``compact()`` retires superseded batch dirs
         only on the NEXT compaction cycle (Iceberg-style retention),
         so a long-lived serving reader keeps valid files for a full
-        cycle; if this reader's memoized datasets do outlive the
-        retention window, the stale file handles surface as OSError —
-        caught here, the dataset cache is dropped, and the query is
-        retried once against the now-current lineage. Corpus stats are
+        cycle. Every lookup checks that the files it touches still
+        exist unchanged; once this reader's listing outlives the
+        retention window (or the dictionary is swapped), that check or
+        the read surfaces as OSError — caught here, the listing and
+        the row-group cache are dropped, and the query is retried once
+        against the now-current lineage. Corpus stats are
         compaction-invariant, but a reader that outlived the window
         may ALSO have missed appended deltas — so the retry re-reads
         ``_meta/meta.json`` too (skipped for ``asof`` readers, whose
         stats are pinned to their snapshot by contract).
         """
+        gen = self._generation
         try:
             return self._search_local_once(queries, prune, decode_acc)
         except OSError:
-            self._pa_datasets = {}
+            self._reset(gen)
+            return self._search_local_once(queries, prune, decode_acc)
+
+    def _reset(self, gen: int) -> None:
+        """Drop the listing and the row-group cache (and, for a live
+        reader, re-read meta) — once per stale generation, however many
+        threads hit the stale handle."""
+        with self._lock:
+            if gen != self._generation:
+                return
+            self._generation += 1
+            self._tables = {}
+            self._row_groups.clear()
+            self.row_group_bytes = 0
             if self.asof is None:
                 from embedanything_spark.index.build import \
                     read_index_text
                 meta_text = read_index_text(self.root, "_meta/meta.json")
                 if meta_text is not None:
                     self.meta = json.loads(meta_text)
-            return self._search_local_once(queries, prune, decode_acc)
 
     def _search_local_once(self, queries: pd.DataFrame,
                            prune: bool = True,
                            decode_acc=None) -> pd.DataFrame:
-        import pyarrow.compute as pc
         qinfo = {}
         all_terms: set[str] = set()
         for r in queries.itertuples():
@@ -505,100 +652,19 @@ class IndexReader:
             "score": pd.Series(dtype="float64")})
         if not qinfo:
             return empty
+        meta = self.meta
         dfs = self._term_dfs(sorted(all_terms))
-        dset = self._dataset("postings")
-        names = dset.schema.names
-        payload = [c for c in ("doc_bytes", "tf_bytes", "dl_bytes")
-                   if c in names]
-        meta_cols = [c for c in ("term", "range_id", "n", "min_doc",
-                                 "max_tf", "min_dl", "max_impact")
-                     if c in names]
-        lazy_split = payload and (_LAZY_ON_LOCAL or not self._local_root)
-        if not lazy_split:
-            # LOCAL root: one read of bounds + payloads together —
-            # page cache makes the payload bytes nearly free, so the
-            # metadata-first split below would only add a pass.
-            blocks = (dset.to_table(
-                columns=meta_cols + payload,
-                filter=_term_filter(sorted(all_terms))).to_pandas())
-            if blocks.empty:
-                return empty
-            kernel = _score_partition_factory(
-                qinfo, self.meta["n_docs"], self.meta["avgdl"], prune,
-                decode_acc, dfs=dfs)
-            return self._finish_local(kernel, blocks, empty)
-        # REMOTE root — METADATA-FIRST fetch: bounds need no payload
-        # bytes. Payloads of LIGHT terms (small total postings) ride
-        # along in one bulk read; HEAVY (Zipf-head) terms' payloads —
-        # megabytes per term on a large index — are fetched lazily on
-        # first decode (term-granular, below), so a head term the
-        # bound sweep prunes wholesale never pays its READ (the
-        # dominant remote per-query cost), not just its decode.
-        blocks = (dset.to_table(columns=meta_cols,
-                                filter=_term_filter(sorted(all_terms)))
-                  .to_pandas())
+        names = self._table("postings").dataset.schema.names
+        cols = [c for c in ("range_id", "n", "min_doc", "max_tf", "min_dl",
+                            "max_impact", "doc_bytes", "tf_bytes",
+                            "dl_bytes") if c in names]
+        blocks = self._lookup("postings", sorted(all_terms),
+                              cols).to_pandas()
         if blocks.empty:
             return empty
-        fetcher = None
-        if "n" in blocks.columns and payload:
-            tot = blocks.groupby("term")["n"].sum()
-            light = sorted(tot[tot <= _HEAVY_TERM_POSTINGS].index)
-            heavy = sorted(tot[tot > _HEAVY_TERM_POSTINGS].index)
-        else:  # legacy index without n: bulk-fetch everything
-            light = sorted(all_terms)
-            heavy = []
-        for c in payload:
-            blocks[c] = None
-        if light:
-            lp = (dset.to_table(columns=["term", "min_doc"] + payload,
-                                filter=_term_filter(light))
-                  .to_pandas())
-            merged = blocks.merge(lp, on=["term", "min_doc"],
-                                  how="left", suffixes=("_x", ""))
-            for c in payload:
-                col = merged[c].to_numpy(object)
-                # heavy-term rows miss the left-merge and land as NaN;
-                # the kernel's lazy-miss test is `is None`, so
-                # normalize or the sweep would decode a float.
-                col[pd.isna(col)] = None
-                blocks[c] = col
-        if heavy:
-            # TERM-granular lazy fetch: the kernel asks per decoded
-            # range, but a per-range read re-scans the term's row
-            # groups every call (measured 4.6× slower than bulk at
-            # 20M turns — thousands of tiny reads). Instead, the
-            # first miss on a term pulls ALL of that term's payloads
-            # in one row-group-pruned read and memoizes; a term whose
-            # every range is pruned by the bound sweep never pays its
-            # read at all — that is the saving (Zipf-head terms have
-            # low idf, sort last in the ub visit order, and are the
-            # likeliest to be skipped wholesale once θ is set).
-            term_payloads: dict[str, dict] = {}
-
-            def fetcher(keys, rid):
-                need = sorted({t for t, _ in keys
-                               if t not in term_payloads})
-                if need:
-                    tbl = (dset.to_table(
-                        columns=["term", "min_doc"] + payload,
-                        filter=_term_filter(need)).to_pandas())
-                    for t in need:
-                        term_payloads[t] = {}
-                    for r in tbl.itertuples():
-                        term_payloads[r.term][int(r.min_doc)] = (
-                            r.doc_bytes, r.tf_bytes, r.dl_bytes)
-                return {(t, md): term_payloads[t][md]
-                        for t, md in keys}
         kernel = _score_partition_factory(
-            qinfo, self.meta["n_docs"], self.meta["avgdl"], prune,
-            decode_acc, dfs=dfs, payload_fetch=fetcher)
-        return self._finish_local(kernel, blocks, empty)
-
-    def _finish_local(self, kernel, blocks, empty) -> pd.DataFrame:
-        """Run the scoring kernel over the pooled block rows, rank the
-        ≤k survivors per query, and join turn metadata (both the bulk
-        and lazy serving fetch paths end here)."""
-        import pyarrow.compute as pc
+            qinfo, meta["n_docs"], meta["avgdl"], prune, decode_acc,
+            dfs=dfs)
         parts = list(kernel([blocks]))
         if not parts:
             return empty
@@ -611,13 +677,7 @@ class IndexReader:
             ["query_id", "score", "doc_id"],
             ascending=[True, False, True], ignore_index=True)
         cands["rank"] = cands.groupby("query_id").cumcount() + 1
-        ids = sorted(cands["doc_id"].unique().tolist())
-        dm = (self._dataset("docmap")
-              .to_table(columns=["doc_id", "conv_id", "turn_idx"],
-                        filter=(pc.field("doc_id") >= ids[0])
-                        & (pc.field("doc_id") <= ids[-1])
-                        & pc.field("doc_id").isin(ids))
-              .to_pandas())
+        dm = self._docmap(cands["doc_id"].unique().tolist())
         out = cands.merge(dm, on="doc_id", how="inner")
         return (out[_RESULT_COLS]
                 .sort_values(["query_id", "rank"], ignore_index=True)
@@ -649,8 +709,8 @@ class IndexReader:
             return self._empty()
 
         # per-term df resolves DRIVER-SIDE from the term-sorted
-        # dictionary (pyarrow, row-group pruned — a few row groups for
-        # a few dozen terms) and ships in the kernel closure: the
+        # dictionary (the serving path's keyed lookup — a few cached
+        # row groups for a few dozen terms) and ships in the kernel closure: the
         # per-query Spark job is postings scan → one exchange →
         # score, with no dictionary scan and no broadcast join stage.
         # Unseen terms simply resolve to no df / no blocks. If the
@@ -683,7 +743,7 @@ class IndexReader:
                                      decode_acc, dfs=dfs),
             schema=_CAND_SCHEMA)
         # The per-query rank + k-cut runs DRIVER-SIDE in pandas, the
-        # same kernel-output shape _finish_local ranks for serving:
+        # same kernel-output shape search_local ranks for serving:
         # cands is ≤ n_buckets·Σk rows by construction (each partition
         # pre-merged to its own top-k, every doc scored in exactly one
         # partition — range_id routing), so a row_number Window here
@@ -710,21 +770,15 @@ class IndexReader:
         # groups holding the hits — the fetch reads O(Σk), not
         # O(corpus) (the reference's id-keyed corpus fetch,
         # examples/SearchAgent/SearchR1/lance_retrieval.py:123-166).
-        # The fetch itself runs DRIVER-SIDE through pyarrow (the same
-        # row-group-pruned read the serving path uses): Σk rows never
+        # The fetch itself runs DRIVER-SIDE through the serving path's
+        # keyed docmap lookup (row-group cache): Σk rows never
         # justify scheduling a second Spark job per query batch —
         # measured ~30% of single-query distributed latency. Falls
         # back to the JVM-side scan when pyarrow has no filesystem for
         # the index root's scheme.
         ids = sorted(ranked_pdf["doc_id"].unique().tolist())
         try:
-            import pyarrow.compute as pc
-            dm = (self._dataset("docmap")
-                  .to_table(columns=["doc_id", "conv_id", "turn_idx"],
-                            filter=(pc.field("doc_id") >= ids[0])
-                            & (pc.field("doc_id") <= ids[-1])
-                            & pc.field("doc_id").isin(ids))
-                  .to_pandas())
+            dm = self._docmap(ids)
         except (OSError, NotImplementedError, ValueError):
             dm = None
         if dm is not None:

@@ -5,7 +5,8 @@ The reference ships an OpenAI-compatible embedding server
 :148, run :838). This is the Spark-engine analogue, built on the
 serving read path:
 
-- ``GET /health`` — liveness + index metadata.
+- ``GET /health`` — liveness, index metadata and the reader's
+  row-group cache counters (fills, hits, resident bytes, cap).
 - ``POST /v1/embeddings`` — OpenAI-shaped request/response
   (``{"model": ..., "input": "text" | ["text", ...]}`` →
   ``{"object": "list", "data": [{"embedding": [...], ...}]}``) over a
@@ -232,9 +233,10 @@ class _Handler(BaseHTTPRequestHandler):
     def do_GET(self):
         if self.path == "/health":
             meta = dict(self.reader.meta) if self.reader else {}
+            cache = self.reader.cache_stats() if self.reader else {}
             self._send(200, {"status": "healthy",
                              "n_docs": meta.get("n_docs"),
-                             "avgdl": meta.get("avgdl")})
+                             "avgdl": meta.get("avgdl"), **cache})
         else:
             self._send(404, {"error": f"no route {self.path}"})
 

@@ -238,78 +238,45 @@ def test_bm25_dataframe_plan_no_term_window(spark):
     assert "BroadcastExchange" in plan or "broadcast" in plan.lower()
 
 
-def test_serving_lazy_payload_rank_identity(spark, tmp_path,
-                                            queries_pdf, monkeypatch):
-    """Serving's lazy heavy-term payload path is rank-identical to the
-    bulk path: force EVERY term onto the lazy path (threshold 0) and
-    compare against the untouched bulk fetch, pruned and unpruned,
-    plus decode parity (the lazy read must not change what the bound
+def test_serving_prune_rank_identity(spark, tmp_path, queries_pdf):
+    """The serving path's one fetch path: pruned equals unpruned, and a
+    warm row-group cache answers and decodes exactly as the cold first
+    pass did (the cache changes what is read, never what the bound
     sweep decodes)."""
-    from embedanything_spark.index import query as qmod
-
     t = gen_transcripts_df(spark, 60)
-    root = str(tmp_path / "lazy")
+    root = str(tmp_path / "prune")
     IndexWriter(root, block_range=64, num_partitions=2).build(t)
     reader = IndexReader(None, root)
     q = queries_pdf.head(12)
-    bulk_cnt = _Counter()
-    bulk = reader.search_local(q, decode_acc=bulk_cnt)
-
-    monkeypatch.setattr(qmod, "_LAZY_ON_LOCAL", True)
-    monkeypatch.setattr(qmod, "_HEAVY_TERM_POSTINGS", 0)
-    lazy_reader = IndexReader(None, root)
-    lazy_cnt = _Counter()
-    lazy = lazy_reader.search_local(q, decode_acc=lazy_cnt)
-    pd.testing.assert_frame_equal(lazy, bulk)
-    assert lazy_cnt.n == bulk_cnt.n
-    unpruned = lazy_reader.search_local(q, prune=False)
-    pd.testing.assert_frame_equal(lazy, unpruned)
-
-    # MIXED light/heavy split — the path a realistic Zipf corpus
-    # actually takes (the sf1 index crashed here once: heavy-term
-    # rows miss the light bulk-merge and must land as None, not the
-    # merge's NaN, or the sweep decodes a float)
-    import pyarrow.dataset as ds
-
-    tot = (ds.dataset(
-        [str(p) for p in __import__("pathlib").Path(root).rglob(
-            "*.parquet") if "kind=block" in str(p)])
-        .to_table(columns=["term", "n"]).to_pandas()
-        .groupby("term")["n"].sum())
-    assert tot.nunique() > 1, "fixture must have uneven term mass"
-    monkeypatch.setattr(qmod, "_HEAVY_TERM_POSTINGS",
-                        int(tot.median()))
-    mixed_reader = IndexReader(None, root)
+    cold = reader.search_local(q, decode_acc=(cold_cnt := _Counter()))
+    warm = reader.search_local(q, decode_acc=(warm_cnt := _Counter()))
+    pd.testing.assert_frame_equal(warm, cold)
+    assert warm_cnt.n == cold_cnt.n
+    unpruned = reader.search_local(q, prune=False,
+                                   decode_acc=(full_cnt := _Counter()))
+    pd.testing.assert_frame_equal(cold, unpruned)
+    assert cold_cnt.n <= full_cnt.n
+    fresh = IndexReader(None, root)
     pd.testing.assert_frame_equal(
-        mixed_reader.search_local(q, decode_acc=(m_cnt := _Counter())),
-        bulk)
-    assert m_cnt.n == bulk_cnt.n
+        fresh.search_local(q, decode_acc=(f_cnt := _Counter())), cold)
+    assert f_cnt.n == cold_cnt.n
 
 
-def test_lazy_split_regime_default(spark, tmp_path, queries_pdf,
-                                   monkeypatch):
-    """The lazy heavy-term payload split is REGIME-AWARE: a local
-    index root (plain path or file:// URI) takes the one-pass bulk
-    read (page cache makes payload bytes nearly free — measured 1.05
-    lazy/bulk at sf1 post-kernel-opts), while a root on any
-    non-local pyarrow filesystem engages the metadata-first lazy
-    split (skipped payload READS are the point there). Simulated
-    end-to-end with a SubTreeFileSystem — a real pyarrow FS that is
-    not a LocalFileSystem — and the results must stay identical."""
+def test_nonlocal_root_serves_through_cache(spark, tmp_path, queries_pdf,
+                                            monkeypatch):
+    """A root on a non-local pyarrow filesystem serves through the
+    same cached lookups as a local one, frame-equal. Simulated end to
+    end with a SubTreeFileSystem — a real pyarrow FS that is not a
+    LocalFileSystem."""
     from pyarrow import fs as pafs
 
     from embedanything_spark.index import build as bmod
-    from embedanything_spark.index import query as qmod
 
     t = gen_transcripts_df(spark, 50)
     root = str(tmp_path / "regime")
     IndexWriter(root, block_range=64, num_partitions=2).build(t)
     q = queries_pdf.head(8)
-
-    bulk_reader = IndexReader(None, root)
-    assert bulk_reader._local_root is True
-    assert IndexReader(None, "file://" + root)._local_root is True
-    bulk = bulk_reader.search_local(q)
+    local = IndexReader(None, root).search_local(q)
 
     real_index_fs = bmod.index_fs
 
@@ -320,11 +287,16 @@ def test_lazy_split_regime_default(spark, tmp_path, queries_pdf,
         return fsys, base
 
     monkeypatch.setattr(bmod, "index_fs", nonlocal_index_fs)
-    # force every term heavy so the lazy fetcher actually runs
-    monkeypatch.setattr(qmod, "_HEAVY_TERM_POSTINGS", 0)
-    remote_reader = IndexReader(None, root)
-    assert remote_reader._local_root is False
-    pd.testing.assert_frame_equal(remote_reader.search_local(q), bulk)
+    remote = IndexReader(None, root)
+    pd.testing.assert_frame_equal(remote.search_local(q), local)
+    assert isinstance(remote._table("postings").fs,
+                      pafs.SubTreeFileSystem)
+    fills = remote.cache_stats()["row_group_fills"]
+    assert fills > 0
+    pd.testing.assert_frame_equal(remote.search_local(q), local)
+    stats = remote.cache_stats()
+    assert stats["row_group_fills"] == fills
+    assert stats["row_group_hits"] > 0
 
 
 def test_search_k_zero_is_empty_not_crash(spark, tmp_path):

@@ -53,6 +53,17 @@ def test_health(server):
     assert code == 200
     assert body["status"] == "healthy"
     assert body["n_docs"] > 0
+    # the reader's row-group cache counters ride along
+    for key in ("row_group_fills", "row_group_hits", "row_group_bytes",
+                "row_group_max_bytes"):
+        assert isinstance(body[key], int) and body[key] >= 0
+    assert body["row_group_bytes"] <= body["row_group_max_bytes"]
+    code, _ = _post(f"{server}/v1/search", {"query": "term00000", "k": 3})
+    assert code == 200
+    _, after = _get(f"{server}/health")
+    assert after["row_group_fills"] > 0
+    assert (after["row_group_fills"] + after["row_group_hits"]
+            > body["row_group_fills"] + body["row_group_hits"])
 
 
 def test_embeddings_openai_shape(server):
